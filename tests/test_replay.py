@@ -141,3 +141,32 @@ def test_fused_and_pruned_change_detect_agree(spark, tmp_path, wal_dir, monkeypa
         )
     assert_states_equal(states[0], states[1])
     assert metas[0] == metas[1]
+
+
+@pytest.mark.parametrize(
+    "mode,fused_limit",
+    [("mor", None), ("cow", 10**9), ("cow", 0)],
+    ids=["mor_delta", "cow_fused", "cow_pruned"],
+)
+def test_bucket_write_has_one_shuffle(spark, tmp_path, wal_dir, monkeypatch, mode, fused_limit):
+    """Plan-shape guard on the commit path: every DataFrame the merge hands
+    to write_bucket_files (the MOR delta write, the COW payload merge in
+    both change-detect shapes) carries exactly one hash exchange — the
+    bucket repartition that the LWW aggregate and the partitioned write
+    both reuse."""
+    from trde703_openfoodfacts_etl_spark.operators import merge as M
+
+    if fused_limit is not None:
+        monkeypatch.setattr(M, "FUSED_DETECT_MAX_ROWS", fused_limit)
+    plans = []
+    write = LakeTable.write_bucket_files
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "write_bucket_files", spy)
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=8)
+    run_incremental(lake, wal_dir, segments_per_batch=1, mode=mode)
+    assert len(plans) == 3
+    assert [p.count("Exchange hashpartitioning") for p in plans] == [1, 1, 1]

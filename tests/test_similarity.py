@@ -1,16 +1,12 @@
-"""Similarity search: exact brute-force baseline vs LSH / IVF approximate
-paths (recall sanity on the driver's embeddings table)."""
+"""Similarity search: the exact brute-force baseline against DuckDB, and
+the vectorized LSH / IVF index builders against their declarative forms."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from trde703_openfoodfacts_etl_spark.operators.similarity import (
-    cosine_topk,
-    ivf_topk,
-    lsh_topk,
-)
+from trde703_openfoodfacts_etl_spark.operators.similarity import cosine_topk
 
 
 @pytest.fixture(scope="module")
@@ -33,22 +29,6 @@ def test_bruteforce_shape(emb, probes, exact):
     assert len(exact) == 8 * 10
     # self never appears
     assert all(p != n for p, n in exact)
-
-
-def test_lsh_recall(emb, probes, exact):
-    # synthetic near-uniform vectors are LSH-hostile (weak cluster structure):
-    # short codes + many bands is the right operating point; recall ≥ 0.6
-    got = {(r["probe_id"], r["neighbor_id"])
-           for r in lsh_topk(emb, probes, k=10, dim=64, n_planes=4, bands=12).collect()}
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.6, f"LSH recall too low: {recall}"
-
-
-def test_ivf_recall(emb, probes, exact):
-    got = {(r["probe_id"], r["neighbor_id"])
-           for r in ivf_topk(emb, probes, k=10, dim=64, n_cells=8, nprobe=4).collect()}
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
 def test_exact_matches_duckdb(emb, probes, spark, sf_dir):

@@ -141,15 +141,15 @@ def asof_join(
             _TB, F.lit(None).cast(right.schema[right_tiebreak].dataType)
         )
         r_tagged = r_tagged.withColumn(_TB, F.col(right_tiebreak))
-    r_keep = [*keys, _SIDE, _TS, _PAY] + ([_TB] if right_tiebreak is not None else [])
-    r_tagged = r_tagged.select(*r_keep)
-    for c in l_tagged.columns:
-        if c not in r_tagged.columns:
-            r_tagged = r_tagged.withColumn(c, F.lit(None).cast(dict(
-                zip(l_tagged.columns, [f.dataType for f in l_tagged.schema.fields])
-            )[c]))
+    r_keep = {*keys, _SIDE, _TS, _PAY} | ({_TB} if right_tiebreak is not None else set())
+    # right side in the left's column order: left-only columns become typed
+    # NULLs, all in one projection
     cols = l_tagged.columns
-    u = l_tagged.select(cols).unionByName(r_tagged.select(cols))
+    r_side = r_tagged.select(*[
+        F.col(f.name) if f.name in r_keep else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in l_tagged.schema.fields
+    ])
+    u = l_tagged.unionByName(r_side)
 
     # Inclusive: a right row at the same ts is visible to the left row
     # (side 0 sorts before side 1). Strict: left sorts first. The optional

@@ -8,11 +8,10 @@ in-batch dedup to a full cross-batch CDC apply.
 Execution design (what survives 100 TB):
 
 1. **LWW as partial aggregation.** ``max_by(struct(payload), struct(ts,
-   lsn))`` under ``groupBy`` — Catalyst plans a hash aggregate with a
-   map-side partial phase, so a hot key (one turn updated millions of times)
-   is reduced on every input partition *before* the shuffle: skew-safe
-   without manual salting, AQE mops up residual imbalance. A window
-   (`row_number`) would sort every event of the hot key into one task.
+   lsn))`` under ``groupBy`` — the one kernel, :func:`..sources.lake.lww_winners`,
+   shared with the merge-on-read resolve. Catalyst plans a hash aggregate
+   with a map-side partial phase, so a hot key is reduced on every input
+   partition *before* the shuffle: skew-safe without manual salting.
 
 2. **Skinny change detection.** Deciding *what changed* never moves the
    payload: a hash-only projection of the batch (key, bucket, order-key,
@@ -58,7 +57,14 @@ from ..schema import (
     META_LSN,
     META_ROW_HASH,
 )
-from ..sources.lake import LakeTable, SnapshotConflict, bucket_expr, row_hash_expr
+from ..sources.lake import (
+    LakeTable,
+    SnapshotConflict,
+    bucket_expr,
+    lww_ts,
+    lww_winners,
+    row_hash_expr,
+)
 
 ENVELOPE_COLS = ("op", "lsn", "event_ts")
 
@@ -74,36 +80,6 @@ ENVELOPE_COLS = ("op", "lsn", "event_ts")
 #: ~8M × 30 B ≈ 240 MB spread over the cluster; deployments can tune it
 #: per-table via this module constant.
 FUSED_DETECT_MAX_ROWS = 8_000_000
-
-_TS_FLOOR = "CAST('1970-01-01 00:00:00' AS TIMESTAMP)"
-
-
-def _order_struct(ts_col, lsn_col):
-    """LWW ordering key: (coalesce(ts, epoch), lsn) — the reference's
-    desc(coalesce(last_modified_t, 0)) with the WAL position as tiebreaker."""
-    return F.struct(
-        F.coalesce(ts_col, F.expr(_TS_FLOOR)).alias("o_ts"), lsn_col.alias("o_lsn")
-    )
-
-
-def lww_winners(env_df, payload_cols: list[str]):
-    """One surviving event per (conv_id, turn_idx): greatest (ts, lsn).
-
-    Partial-aggregate formulation (module docstring #1). Exact duplicate
-    redeliveries (same lsn) are absorbed: identical order key + payload →
-    identical winner either way.
-    """
-    nonkey = [c for c in payload_cols if c not in KEY_COLS]
-    carried = F.struct(*[F.col(c) for c in nonkey], F.col("op"), F.col("lsn"))
-    agg = env_df.groupBy(*KEY_COLS).agg(
-        F.max_by(carried, _order_struct(F.col("ts"), F.col("lsn"))).alias("_w"),
-    )
-    return agg.select(
-        *KEY_COLS,
-        *[F.col(f"_w.{c}").alias(c) for c in nonkey],
-        F.col("_w.op").alias("op"),
-        F.col("_w.lsn").alias(META_LSN),
-    )
 
 
 def apply_batch(
@@ -237,47 +213,78 @@ def _apply_batch_once(
             "buckets_rewritten": 0,
         }
 
-    _t["plan"] = time.time()
+    def _commit(pre, mode_metrics, replaced, bucket_hwm, bucket_rows, **commit_kw):
+        # the epilogue both modes share. Pre-commit phases land IN the
+        # manifest (post-hoc regression attribution from committed metrics);
+        # the commit duration itself is added to the returned dict after the
+        # commit completes
+        ks = list(_t)
+        metrics = {
+            "batch_id": batch_id,
+            "events_in": int(pre["n_raw"]),
+            "gated_out": int(pre["n_gated_out"] or 0),
+            **mode_metrics,
+            "rows_written": sum(fe["rows"] for fs in replaced.values() for fe in fs),
+            "wall_sec": round(time.time() - t0, 3),
+            "phase_sec": {b: round(_t[b] - _t[a], 3) for a, b in zip(ks, ks[1:])},
+        }
+        wall = metrics["wall_sec"]
+        metrics["events_per_sec"] = round(metrics["events_in"] / wall, 1) if wall > 0 else None
+        new_snap = lake.commit(
+            snap, replaced, bucket_hwm, bucket_rows, stream_id, batch_id, metrics,
+            stream_hwm=segment_hwm, watermark_ts=_batch_watermark(pre), **commit_kw,
+        )
+        metrics["phase_sec"] = dict(
+            metrics["phase_sec"], commit=round(time.time() - _t[ks[-1]], 3)
+        )
+        metrics["snapshot_id"] = new_snap["snapshot_id"]
+        return metrics
 
-    # ---- MOR fast path: append in-batch winners as delta files ---------------
-    # One Spark job total: the winners write IS the first action (no separate
-    # touched-buckets scan — write_bucket_files already reports the buckets
-    # it produced, which is exactly the touched set after LWW). ONE shuffle
-    # total: the batch is repartitioned by bucket up front (bucket is a
-    # function of conv_id, so adding it to the LWW groupBy changes no
-    # group), the aggregate reuses that exchange (subset rule) and the
-    # bucket-partitioned write needs no further shuffle — the previous
-    # lww_winners-then-repartition form shuffled the winners a second time
-    # just to lay them out by bucket.
-    if mode == "mor":
-        nonkey_m = [c for c in payload_cols if c not in KEY_COLS]
-        carried_m = F.struct(*[F.col(c) for c in nonkey_m], F.col("op"), F.col("lsn"))
-        env_b = env.withColumn(META_BUCKET, bucket_expr(num_buckets)).repartition(
+    def _bucket_lww(df, carried, lsn):
+        # ONE payload shuffle: the rows are repartitioned by the bucket
+        # column (bucket is a function of conv_id, so adding it to the LWW
+        # groupBy changes no group). HashPartitioning(_bucket) satisfies the
+        # ClusteredDistribution of groupBy(_bucket, conv_id, turn_idx)
+        # (subset rule), so the LWW aggregate reuses that exchange, its
+        # output stays bucket-clustered, and the partitioned write needs no
+        # further shuffle. With files_per_bucket == 1 the partitioning is
+        # _bucket ALONE: each bucket lands in exactly one task, so the
+        # dynamic-partition writer emits exactly one file per bucket —
+        # partitioning by (_bucket, conv_id) spreads every bucket over every
+        # shuffle task, and each task writes its own file per bucket (~tasks
+        # × buckets tiny files per epoch, each re-read and footer-stat'ed by
+        # the next batch — measured at 13 files/bucket/epoch and a3_write
+        # 6.5 s for a 200k-row table). A hot bucket is one task, the same
+        # unit compact()/rebucket() already use; within-bucket skew across
+        # keys is still absorbed by map-side partial aggregation, and bucket
+        # count evolution (maybe_rebucket) is the scale lever. Callers that
+        # ask for files_per_bucket > 1 keep the conv_id spread — they
+        # explicitly want multiple writer tasks per bucket.
+        clustered = df.withColumn(META_BUCKET, bucket_expr(num_buckets)).repartition(
             *(
                 [F.col(META_BUCKET)]
                 if files_per_bucket <= 1
                 else [F.col(META_BUCKET), F.col("conv_id")]
             )
         )
+        return lww_winners(clustered, [META_BUCKET, *KEY_COLS], carried, lsn)
+
+    is_del = F.col("op") == "D"
+    tomb_hash = F.when(is_del, F.lit(None).cast("long")).otherwise(row_hash_expr(payload_cols))
+    nonkey = [c for c in payload_cols if c not in KEY_COLS]
+    _t["plan"] = time.time()
+
+    # ---- MOR fast path: append in-batch winners as delta files ---------------
+    # One Spark job total: the winners write IS the first action (no separate
+    # touched-buckets scan — write_bucket_files already reports the buckets
+    # it produced, which is exactly the touched set after LWW), with the one
+    # shuffle of _bucket_lww.
+    if mode == "mor":
         winners = (
-            env_b.groupBy(META_BUCKET, *KEY_COLS)
-            .agg(
-                F.max_by(carried_m, _order_struct(F.col("ts"), F.col("lsn"))).alias("_w")
-            )
-            .select(
-                META_BUCKET,
-                *KEY_COLS,
-                *[F.col(f"_w.{c}").alias(c) for c in nonkey_m],
-                F.col("_w.op").alias("op"),
-                F.col("_w.lsn").alias(META_LSN),
-            )
-            .withColumn(META_DELETED, F.col("op") == "D")
-            .withColumn(
-                META_ROW_HASH,
-                F.when(F.col("op") == "D", F.lit(None).cast("long")).otherwise(
-                    row_hash_expr(payload_cols)
-                ),
-            )
+            _bucket_lww(env, [*nonkey, "op", "lsn"], "lsn")
+            .withColumnRenamed("lsn", META_LSN)
+            .withColumn(META_DELETED, is_del)
+            .withColumn(META_ROW_HASH, tomb_hash)
             .drop("op")
         )
         replaced = lake.write_bucket_files(
@@ -288,40 +295,16 @@ def _apply_batch_once(
         _t["delta_write"] = time.time()
         if not replaced:
             return _commit_empty(pre)
-        rows_written = sum(fe["rows"] for fs in replaced.values() for fe in fs)
         hwm = int(pre["max_lsn"] or 0)
-        metrics = {
-            "batch_id": batch_id,
-            "mode": "mor",
-            "events_in": int(pre["n_raw"]),
-            "gated_out": int(pre["n_gated_out"] or 0),
-            "buckets_touched": len(replaced),
-            "delta_files": sum(len(fs) for fs in replaced.values()),
-            "rows_written": int(rows_written),
-            "wall_sec": round(time.time() - t0, 3),
-            "phase_sec": {
-                _pk[i]: round(_t[_pk[i]] - _t[_pk[i - 1]], 3)
-                for _pk in [list(_t)]
-                for i in range(1, len(_pk))
+        return _commit(
+            pre,
+            {
+                "mode": "mor",
+                "buckets_touched": len(replaced),
+                "delta_files": sum(len(fs) for fs in replaced.values()),
             },
-        }
-        metrics["events_per_sec"] = (
-            round(metrics["events_in"] / metrics["wall_sec"], 1)
-            if metrics["wall_sec"] > 0
-            else None
+            replaced, {b: hwm for b in replaced}, {}, append=True,
         )
-        new_snap = lake.commit(
-            snap, replaced, {b: hwm for b in replaced}, {}, stream_id, batch_id,
-            metrics, append=True, stream_hwm=segment_hwm,
-            watermark_ts=_batch_watermark(pre),
-        )
-        _t["commit"] = time.time()
-        ks = list(_t)
-        metrics["phase_sec"] = dict(
-            metrics["phase_sec"], commit=round(_t["commit"] - _t[ks[-2]], 3)
-        )
-        metrics["snapshot_id"] = new_snap["snapshot_id"]
-        return metrics
 
     # ---- action 1 (COW only): skinny in-batch LWW pre-aggregate --------------
     # ONE narrow scan of the batch serves BOTH the touched-bucket set and the
@@ -354,11 +337,9 @@ def _apply_batch_once(
     fused = total_state_rows <= FUSED_DETECT_MAX_ROWS
     sk_rows = env.select(
         *KEY_COLS,
-        F.when(F.col("op") == "D", F.lit(None).cast("long"))
-        .otherwise(row_hash_expr(payload_cols))
-        .alias("_h"),
-        (F.col("op") == "D").alias("_d"),
-        F.coalesce(F.col("ts"), F.expr(_TS_FLOOR)).alias("_ts"),
+        tomb_hash.alias("_h"),
+        is_del.alias("_d"),
+        lww_ts().alias("_ts"),
         F.col("lsn").alias("_lsn_w"),
         F.lit(1).cast("long").alias("_n_events"),
         F.col("lsn").alias("_max_lsn"),
@@ -418,7 +399,7 @@ def _apply_batch_once(
             *KEY_COLS,
             F.col(META_ROW_HASH).alias("_h"),
             F.col(META_DELETED).alias("_d"),
-            F.coalesce(F.col("ts"), F.expr(_TS_FLOOR)).alias("_ts"),
+            lww_ts().alias("_ts"),
             F.col(META_LSN).alias("_lsn_w"),
             F.lit(0).cast("long").alias("_n_events"),
             F.lit(None).cast("long").alias("_max_lsn"),
@@ -476,109 +457,40 @@ def _apply_batch_once(
     bucket_hwm = {int(r[META_BUCKET]): int(r["hwm"]) for r in sk if r["hwm"] is not None}
 
     # ---- action 3: full-payload merge + write, changed buckets only ----------
-    # ONE payload shuffle end-to-end: raw batch events union current state,
-    # repartitioned by the bucket column. HashPartitioning(_bucket) satisfies
-    # the ClusteredDistribution of groupBy(_bucket, conv_id, turn_idx)
-    # (subset rule), so the LWW aggregate reuses that exchange, its output
-    # stays bucket-clustered, and the partitioned write needs no further
-    # shuffle. With files_per_bucket == 1 the partitioning is _bucket ALONE:
-    # each bucket lands in exactly one task, so the dynamic-partition writer
-    # emits exactly one file per bucket — partitioning by (_bucket, conv_id)
-    # here spread every bucket over every shuffle task and each task wrote
-    # its own file per bucket (~tasks × buckets tiny files per epoch; the
-    # next batch then re-read them all and the driver footer-stat'ed each —
-    # the guide §6 small-files trap, measured at 13 files/bucket/epoch and
-    # a3_write 6.5 s for a 200k-row table). A hot bucket is one task, the
-    # same unit compact()/rebucket() already use; within-bucket skew across
-    # keys is still absorbed by map-side partial aggregation, and bucket
-    # count evolution (maybe_rebucket) is the scale lever. Callers that ask
-    # for files_per_bucket > 1 keep the conv_id spread — they explicitly
-    # want multiple writer tasks per bucket.
+    # Raw batch events union current state → the one LWW aggregate, with
+    # the single payload shuffle of _bucket_lww.
     replaced: dict[int, list[dict]] = {}
-    rows_written = 0
     if changed_buckets:
-        nonkey = [c for c in payload_cols if c not in KEY_COLS]
-        state_nonkey = [*nonkey, META_LSN, META_DELETED, META_ROW_HASH]
         in_changed = bucket_expr(num_buckets).isin([int(b) for b in changed_buckets])
         batch_side = env.filter(in_changed).select(
             *KEY_COLS,
             *nonkey,
             F.col("lsn").alias(META_LSN),
-            (F.col("op") == "D").alias(META_DELETED),
-            F.when(F.col("op") == "D", F.lit(None).cast("long"))
-            .otherwise(row_hash_expr(payload_cols))
-            .alias(META_ROW_HASH),
+            is_del.alias(META_DELETED),
+            tomb_hash.alias(META_ROW_HASH),
         )
         current_side = lake.read(
             buckets=list(changed_buckets), include_deleted=True, with_meta=True, snap=snap
         ).select(*batch_side.columns)
-        carried = F.struct(*[F.col(c) for c in state_nonkey])
-        merged = (
-            batch_side.unionByName(current_side)
-            .withColumn(META_BUCKET, bucket_expr(num_buckets))
-            .repartition(
-                *(
-                    [F.col(META_BUCKET)]
-                    if files_per_bucket <= 1
-                    else [F.col(META_BUCKET), F.col("conv_id")]
-                )
-            )
-            .groupBy(META_BUCKET, *KEY_COLS)
-            .agg(
-                F.max_by(carried, _order_struct(F.col("ts"), F.col(META_LSN))).alias("_w")
-            )
-            .select(
-                META_BUCKET,
-                *KEY_COLS,
-                *[F.col(f"_w.{c}").alias(c) for c in state_nonkey],
-            )
+        merged = _bucket_lww(
+            batch_side.unionByName(current_side),
+            [*nonkey, META_LSN, META_DELETED, META_ROW_HASH],
+            META_LSN,
         )
         replaced = lake.write_bucket_files(
             merged, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket,
             pre_partitioned=True,
         )
-        rows_written = sum(fe["rows"] for fs in replaced.values() for fe in fs)
     _t["a3_write"] = time.time()
-
-    metrics = {
-        "batch_id": batch_id,
-        "events_in": int(pre["n_raw"]),
-        "gated_out": int(pre["n_gated_out"] or 0),
-        "buckets_touched": len(touched),
-        "buckets_rewritten": len(changed_buckets),
-        "rows_written": int(rows_written),
-        "per_bucket_events": {int(r[META_BUCKET]): int(r["n_events"]) for r in sk},
-        "wall_sec": round(time.time() - t0, 3),
-        # pre-commit phases land IN the manifest (post-hoc regression
-        # attribution from committed metrics); the commit duration itself is
-        # appended to the returned dict after the commit completes
-        "phase_sec": {
-            _pk[i]: round(_t[_pk[i]] - _t[_pk[i - 1]], 3)
-            for _pk in [list(_t)]
-            for i in range(1, len(_pk))
+    return _commit(
+        pre,
+        {
+            "buckets_touched": len(touched),
+            "buckets_rewritten": len(changed_buckets),
+            "per_bucket_events": {int(r[META_BUCKET]): int(r["n_events"]) for r in sk},
         },
-    }
-    metrics["events_per_sec"] = (
-        round(metrics["events_in"] / metrics["wall_sec"], 1)
-        if metrics["wall_sec"] > 0
-        else None
-    )
-    new_snap = lake.commit(
-        snap,
         replaced,
         bucket_hwm,
         {b: bucket_rows[b] for b in changed_buckets},
-        stream_id,
-        batch_id,
-        metrics,
-        stream_hwm=segment_hwm,
-        watermark_ts=_batch_watermark(pre),
         bucket_tombstones={b: bucket_dead[b] for b in changed_buckets},
     )
-    _t["commit"] = time.time()
-    ks = list(_t)
-    metrics["phase_sec"] = dict(
-        metrics["phase_sec"], commit=round(_t["commit"] - _t[ks[-2]], 3)
-    )
-    metrics["snapshot_id"] = new_snap["snapshot_id"]
-    return metrics

@@ -95,6 +95,32 @@ def row_hash_expr(payload_cols: list[str]):
     return F.xxhash64(*[F.col(c) for c in payload_cols])
 
 
+def lww_ts():
+    """LWW order timestamp: ``ts`` with NULL floored to the epoch — the
+    reference's ``desc(coalesce(last_modified_t, 0))``."""
+    return F.coalesce(F.col("ts"), F.lit("1970-01-01 00:00:00").cast("timestamp"))
+
+
+def lww_winners(df, keys: list[str], carried: list[str], lsn: str):
+    """Last-writer-wins: one row per ``keys`` group, the one with the
+    greatest ``(lww_ts(), lsn)``, projected to ``keys + carried``.
+
+    ``max_by`` under ``groupBy`` plans a hash/sort aggregate with a
+    map-side partial phase, so a hot key (one turn updated millions of
+    times) is reduced on every input partition before the shuffle —
+    skew-safe without salting; a ``row_number`` window would sort every
+    event of the hot key into one task. Exact duplicate redeliveries (same
+    order key, same payload) resolve to the same winner either way. The
+    one LWW kernel of the engine: the MOR delta write, the COW payload
+    merge and the merge-on-read resolve all call it."""
+    order = F.struct(lww_ts().alias("o_ts"), F.col(lsn).alias("o_lsn"))
+    return (
+        df.groupBy(*keys)
+        .agg(F.max_by(F.struct(*[F.col(c) for c in carried]), order).alias("_w"))
+        .select(*keys, *[F.col(f"_w.{c}").alias(c) for c in carried])
+    )
+
+
 def _physical_schema(user_schema: T.StructType) -> T.StructType:
     return T.StructType(
         list(user_schema.fields)
@@ -299,18 +325,9 @@ class LakeTable:
                 split_ok = False
 
             nonkey = [f.name for f in phys_unified.fields if f.name not in KEY_COLS]
-            order = F.struct(
-                F.coalesce(F.col("ts"), F.lit("1970-01-01 00:00:00").cast("timestamp")),
-                F.col(META_LSN),
-            )
-            carried = F.struct(*[F.col(c) for c in nonkey])
 
             def _lww(df_):
-                return (
-                    df_.groupBy(*KEY_COLS)
-                    .agg(F.max_by(carried, order).alias("_w"))
-                    .select(*KEY_COLS, *[F.col(f"_w.{c}").alias(c) for c in nonkey])
-                )
+                return lww_winners(df_, KEY_COLS, nonkey, META_LSN)
 
             if split_ok:
                 # contested-key split: the compacted base within a delta

@@ -20,6 +20,12 @@ Two drivers share the same :func:`..operators.merge.apply_batch` sink:
   uncommitted batch (whose data files, if any, were never referenced by a
   manifest).
 
+Both drivers run every microbatch through one per-batch body
+(:func:`_batch_body`): the optional ``transform``, ``apply_batch``, then
+the maintenance the driver's knobs ask for — MOR compaction, bucket-count
+growth, snapshot/file vacuum — after the batch's lake commit. The drivers
+differ only in how they cut and read batches.
+
 This closes the reference's declared gap "Pas de mode incrémental: Full
 reload à chaque run" (docs/architecture.md:265,273) and replaces its bash
 stage sequencing (run-pipeline.sh:59-77).
@@ -151,6 +157,34 @@ def read_batch(spark, paths: list[str], json_payload_schema=None):
     return df
 
 
+def _batch_body(lake: LakeTable, applied: list[dict], stream_id, transform, files_per_bucket,
+                mode, auto_compact_after, auto_vacuum_every, vacuum_keep_snapshots,
+                auto_rebucket_target_bytes):
+    """The per-batch body both drivers share: transform and apply one
+    microbatch, append its metrics to ``applied``, then run maintenance. A crash between the
+    commit and its maintenance loses nothing: maintenance is state-derived
+    (delta depth, snapshot count, bytes/bucket), so the next batch's pass
+    re-evaluates the same conditions."""
+
+    def body(df, batch_id: int, segment_hwm: str | None = None) -> None:
+        if transform is not None:
+            df = transform(df)
+        applied.append(apply_batch(
+            lake, df, batch_id, stream_id=stream_id, files_per_bucket=files_per_bucket,
+            mode=mode, segment_hwm=segment_hwm,
+        ))
+        if auto_compact_after is not None and mode == "mor":
+            lake.maybe_compact(max_delta_files=auto_compact_after,
+                               files_per_bucket=files_per_bucket)
+        if auto_rebucket_target_bytes is not None:
+            lake.maybe_rebucket(target_bucket_bytes=auto_rebucket_target_bytes,
+                                files_per_bucket=files_per_bucket)
+        if auto_vacuum_every is not None and len(applied) % auto_vacuum_every == 0:
+            lake.vacuum(keep_snapshots=vacuum_keep_snapshots)
+
+    return body
+
+
 def run_incremental(
     lake: LakeTable,
     segments_dir: str,
@@ -203,28 +237,16 @@ def run_incremental(
         segs[i : i + segments_per_batch] for i in range(0, len(segs), segments_per_batch)
     ]
     next_id = lake.last_batch_id(stream_id) + 1
-    out = []
+    out: list[dict] = []
+    body = _batch_body(
+        lake, out, stream_id, transform, files_per_bucket, mode, auto_compact_after,
+        auto_vacuum_every, vacuum_keep_snapshots, auto_rebucket_target_bytes,
+    )
     for i, paths in enumerate(batches):
         if max_batches is not None and len(out) >= max_batches:
             break
         df = read_batch(lake.spark, paths, json_payload_schema=json_payload_schema)
-        if transform is not None:
-            df = transform(df)
-        out.append(
-            apply_batch(
-                lake, df, next_id + i, stream_id=stream_id,
-                files_per_bucket=files_per_bucket, mode=mode,
-                segment_hwm=os.path.relpath(paths[-1], segments_dir),
-            )
-        )
-        if auto_compact_after is not None and mode == "mor":
-            lake.maybe_compact(max_delta_files=auto_compact_after,
-                               files_per_bucket=files_per_bucket)
-        if auto_rebucket_target_bytes is not None:
-            lake.maybe_rebucket(target_bucket_bytes=auto_rebucket_target_bytes,
-                                files_per_bucket=files_per_bucket)
-        if auto_vacuum_every is not None and len(out) % auto_vacuum_every == 0:
-            lake.vacuum(keep_snapshots=vacuum_keep_snapshots)
+        body(df, next_id + i, segment_hwm=os.path.relpath(paths[-1], segments_dir))
     return out
 
 
@@ -249,15 +271,12 @@ def run_stream(
     WAL directory, then stops) so tests and bench runs are synchronous; a
     production deployment drops the trigger for continuous tailing.
 
-    The maintenance knobs mirror :func:`run_incremental` — a continuous
+    The maintenance knobs are :func:`run_incremental`'s — a continuous
     deployment never returns to an operator between batches, so compaction
     (``auto_compact_after``, MOR only), snapshot/file GC
     (``auto_vacuum_every`` / ``vacuum_keep_snapshots``) and bucket-layout
-    growth (``auto_rebucket_target_bytes``) run inside ``foreachBatch``,
-    after the batch's lake commit. A crash between the commit and its
-    maintenance loses nothing: maintenance is state-derived (delta depth,
-    snapshot count, bytes/bucket), so the next batch's pass re-evaluates
-    the same conditions.
+    growth (``auto_rebucket_target_bytes``) run inside ``foreachBatch``
+    through the same per-batch body.
 
     A Spark streaming source cannot change schema mid-query, so the declared
     ``source_schema`` is fixed — a segment whose parquet footer carries
@@ -274,6 +293,10 @@ def run_stream(
         .parquet(segments_dir)
     )
     metrics: list[dict] = []
+    body = _batch_body(
+        lake, metrics, stream_id, transform, files_per_bucket, mode, auto_compact_after,
+        auto_vacuum_every, vacuum_keep_snapshots, auto_rebucket_target_bytes,
+    )
     declared = {f.name: f.dataType for f in source_schema.fields}
     checked: set[str] = set()
 
@@ -328,21 +351,7 @@ def run_stream(
 
     def _apply(batch_df, batch_id: int):
         _assert_footer_schemas()
-        df = transform(batch_df) if transform is not None else batch_df
-        metrics.append(
-            apply_batch(
-                lake, df, batch_id, stream_id=stream_id,
-                files_per_bucket=files_per_bucket, mode=mode,
-            )
-        )
-        if auto_compact_after is not None and mode == "mor":
-            lake.maybe_compact(max_delta_files=auto_compact_after,
-                               files_per_bucket=files_per_bucket)
-        if auto_rebucket_target_bytes is not None:
-            lake.maybe_rebucket(target_bucket_bytes=auto_rebucket_target_bytes,
-                                files_per_bucket=files_per_bucket)
-        if auto_vacuum_every is not None and len(metrics) % auto_vacuum_every == 0:
-            lake.vacuum(keep_snapshots=vacuum_keep_snapshots)
+        body(batch_df, batch_id)
 
     q = (
         stream.writeStream.foreachBatch(_apply)
