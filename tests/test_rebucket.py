@@ -11,13 +11,15 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from trde703_openfoodfacts_etl_spark.operators.merge import apply_batch
-from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
+from trde703_openfoodfacts_etl_spark.schema import META_DELETED, META_LSN, TRANSCRIPT_SCHEMA
 from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments
-from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable
+from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable, bucket_expr
 
 from helpers import (
     assert_states_equal,
@@ -271,3 +273,68 @@ def test_drivers_thread_files_per_bucket_to_maintenance(spark, tmp_path, wal_dir
                     auto_rebucket_target_bytes=1 << 40, max_batches=1)
     assert seen["rebucket"]["files_per_bucket"] == 3
     assert seen["compact"]["files_per_bucket"] == 3
+
+
+@pytest.fixture(scope="module")
+def mor_lake_root(spark, tmp_path_factory, wal_dir):
+    """A MOR lake with pending deltas and tombstones, built once; each
+    manifest-stats case rewrites its own copy."""
+    root = str(tmp_path_factory.mktemp("mor_stats") / "lake")
+    _replay(spark, root, wal_dir, mode="mor")
+    return root
+
+
+def _tombstones(lake):
+    return (
+        lake.read(include_deleted=True, with_meta=True)
+        .filter(F.col(META_DELETED))
+        .select(META_LSN, F.col("ts").cast("double").alias("ts"))
+        .toPandas()
+    )
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        lambda lake, tomb: lake.compact(),
+        lambda lake, tomb: lake.compact(
+            drop_tombstones_below_lsn=int(tomb[META_LSN].median())
+        ),
+        lambda lake, tomb: lake.gc_tombstones(
+            lake.watermark_ts() - float(tomb["ts"].median())
+        ),
+        lambda lake, tomb: lake.rebucket(16),
+        lambda lake, tomb: lake.rebucket(3),
+    ],
+    ids=["compact", "compact_drop_lsn", "gc_tombstones", "rebucket_up", "rebucket_down"],
+)
+def test_manifest_bucket_stats_match_data(spark, tmp_path, mor_lake_root, rewrite):
+    """After every maintenance rewrite each bucket's manifest ``rows`` and
+    ``tombstones`` equal the live and tombstoned rows the read path
+    returns for that bucket, and ``hwm_lsn`` covers its highest ``_lsn``."""
+    root = str(tmp_path / "lake")
+    shutil.copytree(mor_lake_root, root)
+    lake = LakeTable(spark, root)
+    tomb = _tombstones(lake)
+    assert len(tomb) > 0
+    rewrite(lake, tomb)
+
+    snap = lake.snapshot()
+    deleted = F.coalesce(F.col(META_DELETED), F.lit(False))
+    got = {
+        int(r["b"]): (int(r["live"]), int(r["dead"]), int(r["max_lsn"]))
+        for r in lake.read(include_deleted=True, with_meta=True)
+        .groupBy(bucket_expr(int(snap["num_buckets"])).alias("b"))
+        .agg(
+            F.sum(F.when(~deleted, 1).otherwise(0)).alias("live"),
+            F.sum(F.when(deleted, 1).otherwise(0)).alias("dead"),
+            F.max(META_LSN).alias("max_lsn"),
+        )
+        .collect()
+    }
+    assert set(got) <= {int(b) for b in snap["buckets"]}
+    for b, binfo in snap["buckets"].items():
+        assert not binfo.get("delta")
+        live, dead, max_lsn = got.get(int(b), (0, 0, 0))
+        assert (binfo["rows"], binfo["tombstones"]) == (live, dead), b
+        assert binfo["hwm_lsn"] >= max_lsn, b

@@ -253,22 +253,43 @@ class LakeTable:
         snap = snap or self.snapshot(snapshot_id)
         unified = self.user_schema(snap)
         phys_unified = _physical_schema(unified)
-        groups: dict[int, list[str]] = {}
+        # one walk over the manifest sorts every file into a schema group:
+        # compacted buckets stream straight through (clean); buckets carrying
+        # unmerged MOR delta files resolve LWW at read time, and only they
+        # pay the aggregate — split into their key-unique base and delta.
+        clean_g: dict[int, list[str]] = {}
+        base_g: dict[int, list[str]] = {}
+        delta_g: dict[int, list[str]] = {}
+        has_delta = False
+        delta_rows = 0
+        base_rows = 0
+        split_ok = True
         for b, binfo in snap["buckets"].items():
             if buckets is not None and int(b) not in buckets:
                 continue
+            if not binfo.get("delta"):
+                for fe in binfo["files"]:
+                    clean_g.setdefault(fe["schema_id"], []).append(
+                        os.path.join(self.root, fe["path"])
+                    )
+                continue
+            has_delta = True
+            tagged = 0
             for fe in binfo["files"]:
-                groups.setdefault(fe["schema_id"], []).append(
-                    os.path.join(self.root, fe["path"])
-                )
-        # merge-on-read: buckets carrying unmerged delta files resolve LWW at
-        # read time — selectively: only delta buckets pay the aggregate,
-        # compacted buckets stream straight through (union afterwards).
-        delta_buckets = {
-            int(b)
-            for b, binfo in snap["buckets"].items()
-            if binfo.get("delta") and (buckets is None or int(b) in buckets)
-        }
+                if fe.get("rows") is None:
+                    split_ok = False
+                if fe.get("delta"):
+                    tagged += 1
+                    delta_rows += int(fe.get("rows") or 0)
+                    g = delta_g
+                else:
+                    base_rows += int(fe.get("rows") or 0)
+                    g = base_g
+                g.setdefault(fe["schema_id"], []).append(os.path.join(self.root, fe["path"]))
+            if tagged == 0:
+                # pre-tag manifest (no per-file delta markers): base and
+                # delta files are indistinguishable — full-agg fallback
+                split_ok = False
 
         def _assemble(groups_: dict[int, list[str]]):
             df_ = None
@@ -278,41 +299,8 @@ class LakeTable:
                 df_ = part if df_ is None else df_.unionByName(part)
             return df_
 
-        if delta_buckets:
-            clean_g: dict[int, list[str]] = {}
-            base_g: dict[int, list[str]] = {}
-            delta_g: dict[int, list[str]] = {}
-            delta_rows = 0
-            base_rows = 0
-            split_ok = True
-            for b, binfo in snap["buckets"].items():
-                if buckets is not None and int(b) not in buckets:
-                    continue
-                if int(b) not in delta_buckets:
-                    for fe in binfo["files"]:
-                        clean_g.setdefault(fe["schema_id"], []).append(
-                            os.path.join(self.root, fe["path"])
-                        )
-                    continue
-                tagged = 0
-                for fe in binfo["files"]:
-                    if fe.get("rows") is None:
-                        split_ok = False
-                    if fe.get("delta"):
-                        tagged += 1
-                        delta_rows += int(fe.get("rows") or 0)
-                        delta_g.setdefault(fe["schema_id"], []).append(
-                            os.path.join(self.root, fe["path"])
-                        )
-                    else:
-                        base_rows += int(fe.get("rows") or 0)
-                        base_g.setdefault(fe["schema_id"], []).append(
-                            os.path.join(self.root, fe["path"])
-                        )
-                if tagged == 0:
-                    # pre-tag manifest (no per-file delta markers): base and
-                    # delta files are indistinguishable — full-agg fallback
-                    split_ok = False
+        df = _assemble(clean_g)
+        if has_delta:
             if delta_rows > MOR_SPLIT_MAX_DELTA_ROWS:
                 split_ok = False
             if delta_rows > MOR_SPLIT_MAX_DELTA_FRACTION * base_rows:
@@ -362,10 +350,7 @@ class LakeTable:
                 for sid_, paths in list(base_g.items()) + list(delta_g.items()):
                     merged_g.setdefault(sid_, []).extend(paths)
                 ddf = _lww(_assemble(merged_g))
-            cdf = _assemble(clean_g)
-            df = ddf if cdf is None else cdf.unionByName(ddf)
-        else:
-            df = _assemble(groups)
+            df = ddf if df is None else df.unionByName(ddf)
         if df is None:
             df = self.spark.createDataFrame([], phys_unified)
         if not include_deleted:
@@ -719,14 +704,17 @@ class LakeTable:
         include_non_delta: bool = False,
     ) -> dict:
         """Merge-on-read compaction: rewrite delta-carrying buckets into a
-        single resolved generation (LWW applied once). Tombstones are
-        retained by default — they keep late zombies out. GC knobs:
-        ``drop_tombstones_below_lsn`` (WAL retention horizon — no event
-        below that position can still arrive) and
+        single resolved generation (LWW applied once) through
+        :meth:`_rewrite`, in place under the current ``num_buckets``.
+        Tombstones are retained by default — they keep late zombies out. GC
+        knobs: ``drop_tombstones_below_lsn`` (WAL retention horizon — no
+        event below that position can still arrive) and
         ``drop_tombstones_ts_before`` (event-time watermark horizon — see
         :meth:`gc_tombstones`). ``include_non_delta`` lets the GC rewrite
-        already-compacted buckets that still carry old tombstones.
-        Returns the new snapshot."""
+        already-compacted buckets that still carry old tombstones. A bucket
+        the GC empties keeps an empty file list; every bucket keeps the
+        larger of its data and previous ``hwm_lsn``. Returns the new
+        snapshot."""
         snap = self.snapshot()
         todo = [
             int(b)
@@ -736,53 +724,18 @@ class LakeTable:
         ]
         if not todo:
             return snap
-        resolved = self.read(
-            buckets=todo, include_deleted=True, with_meta=True, snap=snap
-        ).withColumn(META_BUCKET, bucket_expr(snap["num_buckets"]))
+        drops = []
         if drop_tombstones_below_lsn is not None:
-            resolved = resolved.filter(
-                ~(F.col(META_DELETED) & (F.col(META_LSN) < drop_tombstones_below_lsn))
-            )
+            drops.append(F.col(META_LSN) < drop_tombstones_below_lsn)
         if drop_tombstones_ts_before is not None:
             ts_unix = F.coalesce(
                 F.col("ts").cast("timestamp_ltz").cast("double"), F.lit(0.0)
             )
-            resolved = resolved.filter(
-                ~(F.col(META_DELETED) & (ts_unix < drop_tombstones_ts_before))
-            )
-        written = self.write_bucket_files(
-            resolved, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket
+            drops.append(ts_unix < drop_tombstones_ts_before)
+        return self._rewrite(
+            snap, snap, todo, files_per_bucket,
+            lambda _rows: {"compacted_buckets": todo}, drops,
         )
-        # buckets whose resolved state is empty (e.g. everything tombstoned
-        # and GC'd) still replace their file lists — with an empty list
-        replaced = {b: written.get(b, []) for b in todo}
-        stats = (
-            resolved.groupBy(META_BUCKET)
-            .agg(
-                F.sum(F.when(~F.col(META_DELETED), 1).otherwise(0)).alias("live"),
-                F.sum(F.when(F.col(META_DELETED), 1).otherwise(0)).alias("dead"),
-                F.max(META_LSN).alias("hwm"),
-            )
-            .collect()
-        )
-        rows = {int(r[META_BUCKET]): int(r["live"]) for r in stats}
-        rows = {b: rows.get(b, 0) for b in todo}
-        dead = {int(r[META_BUCKET]): int(r["dead"]) for r in stats}
-        dead = {b: dead.get(b, 0) for b in todo}
-        hwm = {
-            b: max(
-                next((int(r["hwm"]) for r in stats if int(r[META_BUCKET]) == b), 0),
-                int(snap["buckets"].get(str(b), {}).get("hwm_lsn") or 0),
-            )
-            for b in todo
-        }
-        new = self.commit(
-            snap, replaced, hwm, rows, "compaction",
-            self.last_batch_id("compaction", snap) + 1,
-            {"compacted_buckets": todo},
-            bucket_tombstones=dead,
-        )
-        return new
 
     def rebucket(self, new_num_buckets: int, files_per_bucket: int = 1) -> dict:
         """Bucket-count evolution as a committed snapshot operation — the
@@ -790,27 +743,29 @@ class LakeTable:
         :meth:`create` time; a table that grows 100× would otherwise be stuck
         with COW rewrite units and pruning granularity sized for day one.
 
-        One Spark job: read the full current state (tombstones kept, MOR
-        deltas resolved by the read path), re-hash every row under
-        ``bucket_expr(new_num_buckets)``, write all buckets into one new
-        epoch, and commit a child snapshot whose ENTIRE buckets map is
-        replaced and which carries the new ``num_buckets``. Because
-        ``num_buckets`` is per-snapshot and every reader/writer derives
-        bucketing from the snapshot it reads, everything downstream follows
-        automatically: time travel to a pre-rebucket snapshot reads the old
-        layout (its file lists are pinned in the old manifest), resumed
-        ingest merges under the new bucketing (``apply_batch`` re-reads the
-        head snapshot per batch and on CAS retry), ``key_history`` hashes
-        each snapshot with its own bucket count, and vacuum reclaims the old
-        layout's files once the pre-rebucket snapshots age out.
+        The whole table goes through :meth:`_rewrite` (a write job and a
+        stats job): every row of the current state (tombstones kept, MOR
+        deltas resolved by the read path) is re-hashed under
+        ``bucket_expr(new_num_buckets)`` into one new epoch, and the child
+        snapshot carries the new ``num_buckets`` and a buckets map replaced
+        wholesale. Because ``num_buckets`` is per-snapshot and every
+        reader/writer derives bucketing from the snapshot it reads,
+        everything downstream follows automatically: time travel to a
+        pre-rebucket snapshot reads the old layout (its file lists are
+        pinned in the old manifest), resumed ingest merges under the new
+        bucketing (``apply_batch`` re-reads the head snapshot per batch and
+        on CAS retry), ``key_history`` hashes each snapshot with its own
+        bucket count, and vacuum reclaims the old layout's files once the
+        pre-rebucket snapshots age out.
 
         Cost model at scale: one full-table rewrite — the same price as a
         global compaction, amortized over the 100× of growth that motivated
         it. Concurrency: single CAS attempt; a concurrent writer winning the
         race raises :class:`SnapshotConflict` (re-run against the new head —
-        same contract as :meth:`compact`). Per-new-bucket ``hwm_lsn`` is
-        re-derived from the data; the table-wide high-watermark is preserved
-        via the rebucket metrics entry (resume correctness rides
+        same contract as :meth:`compact`, whose maintenance counter
+        ``streams["compaction"]`` it also bumps). Per-new-bucket ``hwm_lsn``
+        is re-derived from the data; the table-wide high-watermark is
+        preserved via the rebucket metrics entry (resume correctness rides
         ``stream_hwm``/batch markers, which carry over untouched).
         """
         snap = self.snapshot()
@@ -819,67 +774,83 @@ class LakeTable:
             return snap
         if new_num_buckets < 1:
             raise ValueError(f"rebucket: num_buckets must be >= 1, got {new_num_buckets}")
+        table_hwm = max(
+            (int(b.get("hwm_lsn") or 0) for b in snap["buckets"].values()), default=0
+        )
+        return self._rewrite(
+            snap,
+            dict(snap, num_buckets=int(new_num_buckets), buckets={}),
+            None,
+            files_per_bucket,
+            lambda rows: {
+                "rebucket": {
+                    "from_buckets": old_p,
+                    "to_buckets": int(new_num_buckets),
+                    "table_hwm_lsn": table_hwm,
+                    "rows": sum(rows.values()),
+                }
+            },
+        )
+
+    def _rewrite(self, snap, base, buckets, files_per_bucket, metrics, drops=()) -> dict:
+        """The one maintenance rewrite behind :meth:`compact`,
+        :meth:`gc_tombstones` and :meth:`rebucket`. Resolves ``buckets`` of
+        ``snap`` (None: all) once through the read path, tombstones kept;
+        drops tombstones matching any of ``drops``; writes the rows
+        bucketed under ``base["num_buckets"]`` into one new epoch; takes
+        per-bucket live/dead/hwm from the written files; and commits onto
+        ``base``. Replaced buckets are ``buckets`` (an emptied one gets an
+        empty file list) or, for a full rewrite, every bucket written; each
+        keeps the larger of its data hwm and its ``hwm_lsn`` in ``base``.
+        ``metrics(rows)`` builds the commit's metrics from the live counts."""
+        p = int(base["num_buckets"])
         resolved = self.read(
-            include_deleted=True, with_meta=True, snap=snap
-        ).withColumn(META_BUCKET, bucket_expr(new_num_buckets))
+            buckets=buckets, include_deleted=True, with_meta=True, snap=snap
+        ).withColumn(META_BUCKET, bucket_expr(p))
+        for drop in drops:
+            resolved = resolved.filter(~(F.col(META_DELETED) & drop))
         written = self.write_bucket_files(
             resolved, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket
         )
         # Manifest stats come from a skinny re-read of the files just
         # written (3 columns, no shuffle-heavy MOR resolve) — re-running the
-        # `resolved` plan here would repeat the full-table read + LWW
-        # aggregate the write job already executed, doubling rebucket cost.
-        # The files carry no _bucket column (it was the partition dir), so
-        # recompute it from conv_id — byte-identical to what was written.
+        # `resolved` plan here would repeat the read + LWW aggregate the
+        # write job already executed. The files carry no _bucket column (it
+        # was the partition dir), so recompute it from conv_id —
+        # byte-identical to what was written.
+        stats = {}
         if written:
             paths = [
                 os.path.join(self.root, fe["path"])
                 for files in written.values()
                 for fe in files
             ]
-            skinny = (
+            deleted = F.coalesce(F.col(META_DELETED), F.lit(False))
+            agg = (
                 self.spark.read.parquet(*paths)
                 .select("conv_id", META_DELETED, META_LSN)
-                .withColumn(META_BUCKET, bucket_expr(int(new_num_buckets)))
-            )
-            stats = (
-                skinny.groupBy(META_BUCKET)
+                .withColumn(META_BUCKET, bucket_expr(p))
+                .groupBy(META_BUCKET)
                 .agg(
-                    F.sum(F.when(~F.coalesce(F.col(META_DELETED), F.lit(False)), 1).otherwise(0)).alias("live"),
-                    F.sum(F.when(F.coalesce(F.col(META_DELETED), F.lit(False)), 1).otherwise(0)).alias("dead"),
+                    F.sum(F.when(~deleted, 1).otherwise(0)).alias("live"),
+                    F.sum(F.when(deleted, 1).otherwise(0)).alias("dead"),
                     F.max(META_LSN).alias("hwm"),
                 )
-                .collect()
             )
-        else:
-            stats = []
-        table_hwm = max(
-            (int(b.get("hwm_lsn") or 0) for b in snap["buckets"].values()), default=0
+            stats = {
+                int(r[META_BUCKET]): (int(r["live"]), int(r["dead"]), int(r["hwm"] or 0))
+                for r in agg.collect()
+            }
+        todo = sorted(written) if buckets is None else buckets
+        rows, dead, hwm = {}, {}, {}
+        for b in todo:
+            rows[b], dead[b], top = stats.get(b, (0, 0, 0))
+            hwm[b] = max(top, int(base["buckets"].get(str(b), {}).get("hwm_lsn") or 0))
+        return self.commit(
+            base, {b: written.get(b, []) for b in todo}, hwm, rows, "compaction",
+            self.last_batch_id("compaction", snap) + 1, metrics(rows),
+            bucket_tombstones=dead,
         )
-        new = dict(snap)
-        new["parent"] = snap["snapshot_id"]
-        new["snapshot_id"] = snap["snapshot_id"] + 1
-        new["num_buckets"] = int(new_num_buckets)
-        new["buckets"] = {
-            str(int(r[META_BUCKET])): {
-                "files": written.get(int(r[META_BUCKET]), []),
-                "hwm_lsn": int(r["hwm"] or 0),
-                "rows": int(r["live"]),
-                "tombstones": int(r["dead"]),
-            }
-            for r in stats
-        }
-        new["metrics"] = {
-            "rebucket": {
-                "from_buckets": old_p,
-                "to_buckets": int(new_num_buckets),
-                "table_hwm_lsn": table_hwm,
-                "rows": sum(int(r["live"]) for r in stats),
-            }
-        }
-        new["created_unix"] = time.time()
-        self._write_snapshot(new)
-        return new
 
     def maybe_rebucket(
         self,

@@ -50,13 +50,15 @@ def session_window_metrics(stream_df, gap: str = "30 minutes", watermark: str = 
     )
 
 
-def run_session_stream(spark, segments_dir: str, source_schema, checkpoint_dir: str,
-                       query_name: str = "feed_sessions",
-                       gap: str = "30 minutes", watermark: str = "1 hour"):
+def drain_to_memory(spark, segments_dir: str, source_schema, checkpoint_dir: str,
+                    query_name: str, plan, output_mode: str = "append"):
+    """Run ``plan(stream)`` over everything currently in the WAL dir
+    (available-now trigger + memory sink: synchronous for tests/bench; a
+    production run writes to a metrics topic/table instead) and return the
+    sink table."""
     stream = spark.readStream.schema(source_schema).parquet(segments_dir)
-    agg = session_window_metrics(stream, gap, watermark)
     q = (
-        agg.writeStream.outputMode("append")
+        plan(stream).writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
@@ -64,24 +66,23 @@ def run_session_stream(spark, segments_dir: str, source_schema, checkpoint_dir: 
         .start()
     )
     q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return spark.table(query_name)
+
+
+def run_session_stream(spark, segments_dir: str, source_schema, checkpoint_dir: str,
+                       query_name: str = "feed_sessions",
+                       gap: str = "30 minutes", watermark: str = "1 hour"):
+    return drain_to_memory(
+        spark, segments_dir, source_schema, checkpoint_dir, query_name,
+        lambda s: session_window_metrics(s, gap, watermark),
+    )
 
 
 def run_metrics_stream(spark, segments_dir: str, source_schema, checkpoint_dir: str,
                        query_name: str = "feed_metrics",
                        window: str = "1 minute", watermark: str = "5 minutes"):
-    """Drive the windowed metrics over everything currently in the WAL dir
-    (available-now trigger + memory sink: synchronous for tests/bench; a
-    production run writes to a metrics topic/table instead)."""
-    stream = spark.readStream.schema(source_schema).parquet(segments_dir)
-    agg = windowed_op_metrics(stream, window, watermark)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the windowed op metrics through :func:`drain_to_memory`."""
+    return drain_to_memory(
+        spark, segments_dir, source_schema, checkpoint_dir, query_name,
+        lambda s: windowed_op_metrics(s, window, watermark),
     )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .metrics import drain_to_memory
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -86,19 +88,15 @@ def conversation_state_stream(stream_df):
 
 def run_conversation_state(spark, segments_dir: str, source_schema, checkpoint_dir: str,
                            query_name: str = "conv_state"):
-    stream = spark.readStream.schema(source_schema).parquet(segments_dir)
-    out = conversation_state_stream(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain the WAL through the stateful operator; the update-mode sink
+    holds one row per conversation per batch, so keep each conversation's
+    latest summary."""
+    out = drain_to_memory(
+        spark, segments_dir, source_schema, checkpoint_dir, query_name,
+        conversation_state_stream, output_mode="update",
     )
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT conv_id, max_by(events_seen, max_lsn) AS events_seen, "
-        f"max(max_turn) AS max_turn, max_by(deletes_seen, max_lsn) AS deletes_seen "
-        f"FROM {query_name} GROUP BY conv_id"
+    return out.groupBy("conv_id").agg(
+        F.max_by("events_seen", "max_lsn").alias("events_seen"),
+        F.max("max_turn").alias("max_turn"),
+        F.max_by("deletes_seen", "max_lsn").alias("deletes_seen"),
     )
